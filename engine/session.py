@@ -20,6 +20,14 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = int(os.environ.get("SPARK_ARROW_BATCH", "128"))
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, capped at 24g: in local mode the driver JVM is
+    the whole engine, and a heap the host cannot back gets the JVM
+    OOM-killed instead of spilling. ``SPARK_DRIVER_MEM`` overrides."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(ram_mb // 2, 24 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "spark-extract",
     master: str | None = None,
@@ -43,7 +51,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_BATCH_ROWS))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
         # reap reliable-checkpoint files once their RDD is GC'd (iterative

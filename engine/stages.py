@@ -1,21 +1,25 @@
 """The engine's vectorized Python stages (SURVEY.md §2.10) — the only places
-Python touches row data, always through Arrow batch iterators, never per-row
-Python UDFs (north rule).
+Python touches row data. Every stage is a ``mapInArrow`` function over Arrow
+record batches (never per-row Python UDFs, never pandas), and every stage
+body is a call into ``extraction``, the single-document oracle.
 
-- :func:`detect_blocks`     — stage 1, 1 page row → N candidate-block rows
+- :func:`make_detect_blocks` — stage 1, 1 page row → N candidate-block rows
   (ref detect_and_crop_text_with_boxes, ``text_detection_yolov8.py:229-288``).
   Emits a sentinel row (``block_id = -1``) per document so documents whose
   blocks are all filtered out still reach the output with ``status='empty'``
   (ref "no regions detected" path, ``bilingual_ocr.py:167-181``).
-- :func:`recognize_blocks`  — stage 2, normalized text per surviving block
-  (ref recognize_urdu/recognize_english + post_process,
-  ``urdu_recognition_utrnet.py:132-166``, ``english_ocr_pipeline.py:52-84``).
-- :func:`extract_fused`     — the fused per-document stage used by the
-  throughput path: detect+recognize+reassemble in one Arrow pass, zero
+- :func:`recognize_assemble` — stage 2 of staged mode: normalized text per
+  surviving block (ref recognize_urdu/recognize_english + post_process,
+  ``urdu_recognition_utrnet.py:132-166``, ``english_ocr_pipeline.py:52-84``)
+  and partition-local reading-order reassembly on the sentinel.
+- :func:`make_extract_fused_arrow` — the fused per-document stage used by
+  the throughput path: detect+recognize+reassemble in one pass, zero
   shuffles — the distributed form of the reference's per-page orchestrator
-  ``_process_one_page`` (``bilingual_ocr.py:126-211``). Byte-identical to the
-  staged path by construction (both call the same ``extraction`` functions;
-  asserted by tests/test_golden_e2e.py).
+  ``_process_one_page`` (``bilingual_ocr.py:126-211``).
+
+Staged and fused are byte-identical by construction: both assemble through
+``extraction.core.assemble`` (asserted against the goldens by
+tests/test_golden_e2e.py).
 
 Heavy init (routing tables, keep-sets) is module-level in ``extraction`` and
 imported once per worker process — the engine analog of the reference's
@@ -24,18 +28,24 @@ load-once model state (SURVEY.md §4 O1).
 Arrow batch sizing (``spark.sql.execution.arrow.maxRecordsPerBatch``,
 runtime-settable): the *pages* stages move few, huge rows — 128-row batches
 pipeline the JVM serializer with the Python worker (measured 3-4× faster
-than 512). The *blocks* stages move millions of tiny rows — 4096-row batches
-amortize the per-batch overhead (measured ~2× on staged mode). bench.py sets
-the conf per measurement.
+than 512). The staged block stages move many tiny rows instead; bench.py
+runs them at 4096-row batches and sets the conf per measurement.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from extraction.core import extract_document, recognize_block
+from extraction.core import (
+    ExtractResult,
+    assemble,
+    best_block,
+    extract_document,
+    recognize_block,
+)
 from extraction.html_clean import decode_html
 from extraction.routing import block_route, doc_route
 from extraction.segment import segment_blocks
@@ -46,12 +56,6 @@ BLOCKS_SCHEMA = (
     "n_chars int, n_link_chars int, n_tags int, "
     "link_density double, tag_density double, score double, lang string, "
     "doc_n_blocks int, doc_status string, forced boolean"
-)
-
-# Stage-2 output schema.
-RECOGNIZED_SCHEMA = (
-    "url string, warc_ts timestamp, block_id int, lang string, "
-    "norm_text string, doc_n_blocks int, doc_status string, forced boolean"
 )
 
 # Final extracted schema (SURVEY.md §1.3 `extracted`, sans part_id/lineage
@@ -75,149 +79,125 @@ KEEP_PREDICATE = (
 # `forced`; it must survive the Catalyst filter despite failing the keep rule.
 KEEP_PREDICATE_FALLBACK = f"({KEEP_PREDICATE}) OR forced"
 
+# Stage-1 columns after the (url, warc_ts) pair taken from the page batch.
+_BLOCK_FIELDS = [
+    ("block_id", pa.int32()), ("tag", pa.string()), ("text", pa.string()),
+    ("n_chars", pa.int32()), ("n_link_chars", pa.int32()),
+    ("n_tags", pa.int32()), ("link_density", pa.float64()),
+    ("tag_density", pa.float64()), ("score", pa.float64()),
+    ("lang", pa.string()), ("doc_n_blocks", pa.int32()),
+    ("doc_status", pa.string()), ("forced", pa.bool_()),
+]
 
-def make_detect_blocks(emit_filtered_text: bool = True, fallback: bool = False):
-    """Build the stage-1 fn. With ``emit_filtered_text=False`` the raw text
-    of blocks failing the keep rule is not emitted (features still are) —
-    the in-UDF pushdown of the threshold (ref conf kwarg to model.predict,
-    SURVEY §4 O3): boilerplate bytes never cross the Arrow channel. The
-    pipeline's Catalyst filter re-checks the predicate either way.
+_SPANS_TYPE = pa.list_(
+    pa.struct(
+        [
+            ("block_id", pa.int32()),
+            ("start", pa.int32()),
+            ("end", pa.int32()),
+            ("lang", pa.string()),
+        ]
+    )
+)
+
+# Page columns the fused stage consumes; any other input column passes through.
+_PAGE_COLS = ("url", "warc_ts", "html", "lang")
+
+
+def _sentinel(n_blocks: int, status: str | None) -> tuple:
+    return (-1, "", "", 0, 0, 0, 0.0, 0.0, 0.0, "", n_blocks, status, False)
+
+
+def _page_blocks(html, lang, emit_filtered_text: bool, fallback: bool) -> list[tuple]:
+    """Stage-1 rows of one page: its blocks, then its sentinel — or a lone
+    ``error:<ExcName>`` sentinel if the page cannot be segmented."""
+    try:
+        raw = decode_html(html) if isinstance(html, (bytes, bytearray)) else (html or "")
+        blocks = segment_blocks(raw)
+        droute = doc_route(lang)
+        forced_id = -1
+        if fallback and blocks and not any(b.kept for b in blocks):
+            forced_id = best_block(blocks).block_id
+        rows = []
+        for b in blocks:
+            route = droute if droute is not None else block_route(b.text)
+            forced = b.block_id == forced_id
+            text = b.text if (b.kept or forced or emit_filtered_text) else ""
+            rows.append((
+                b.block_id, b.tag, text, b.n_chars, b.n_link_chars, b.n_tags,
+                b.link_density, b.tag_density, b.score, route, len(blocks),
+                None, forced,
+            ))
+        rows.append(_sentinel(len(blocks), None))
+        return rows
+    except Exception as exc:  # noqa: BLE001 — error rows, not exceptions
+        return [_sentinel(0, f"error:{type(exc).__name__}")]
+
+
+def make_detect_blocks(emit_filtered_text: bool, fallback: bool):
+    """Build the stage-1 fn: pages → candidate blocks (+1 sentinel per doc).
+
+    With ``emit_filtered_text=False`` the raw text of blocks failing the keep
+    rule is not emitted (features still are) — the in-UDF pushdown of the
+    threshold (ref conf kwarg to model.predict, SURVEY §4 O3): boilerplate
+    bytes never cross the Arrow channel. The pipeline's Catalyst filter
+    re-checks the predicate either way.
 
     ``fallback=True`` enables the O5 relaxed second pass: on documents where
     NO block passes the keep rule, the best-scoring block
     (``extraction.core.best_block``) is emitted with ``forced=true`` (and its
     text, regardless of the pushdown) so downstream stages rescue it."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _detect_blocks_impl(batches, emit_filtered_text, fallback)
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            src: list[int] = []  # input page row of each output row
+            rows: list[tuple] = []
+            pages = zip(b.column("html").to_pylist(), b.column("lang").to_pylist())
+            for i, (html, lang) in enumerate(pages):
+                page_rows = _page_blocks(html, lang, emit_filtered_text, fallback)
+                src.extend([i] * len(page_rows))
+                rows.extend(page_rows)
+            take = pa.array(src, pa.int32())
+            cols = list(zip(*rows)) or [()] * len(_BLOCK_FIELDS)
+            yield pa.RecordBatch.from_arrays(
+                [pc.take(b.column("url"), take), pc.take(b.column("warc_ts"), take)]
+                + [pa.array(c, t) for c, (_, t) in zip(cols, _BLOCK_FIELDS)],
+                names=["url", "warc_ts"] + [n for n, _ in _BLOCK_FIELDS],
+            )
 
     return fn
 
 
-def detect_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage 1: pages -> candidate blocks (+1 sentinel per doc)."""
-    return _detect_blocks_impl(batches, True, False)
-
-
-def _detect_blocks_impl(
-    batches: Iterator[pd.DataFrame], emit_filtered_text: bool, fallback: bool
-) -> Iterator[pd.DataFrame]:
-    from extraction.core import best_block
-
-    for pdf in batches:
-        out: dict[str, list] = {
-            "url": [], "warc_ts": [], "block_id": [], "tag": [], "text": [],
-            "n_chars": [], "n_link_chars": [], "n_tags": [],
-            "link_density": [], "tag_density": [], "score": [], "lang": [],
-            "doc_n_blocks": [], "doc_status": [], "forced": [],
-        }
-
-        def emit(url, ts, block_id, tag, text, n_chars, n_link, n_tags,
-                 ld, td, score, lang, doc_n_blocks, doc_status,
-                 forced=False) -> None:
-            out["url"].append(url)
-            out["warc_ts"].append(ts)
-            out["block_id"].append(block_id)
-            out["tag"].append(tag)
-            out["text"].append(text)
-            out["n_chars"].append(n_chars)
-            out["n_link_chars"].append(n_link)
-            out["n_tags"].append(n_tags)
-            out["link_density"].append(ld)
-            out["tag_density"].append(td)
-            out["score"].append(score)
-            out["lang"].append(lang)
-            out["doc_n_blocks"].append(doc_n_blocks)
-            out["doc_status"].append(doc_status)
-            out["forced"].append(forced)
-
-        for url, ts, html, lang in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"]
-        ):
-            try:
-                raw = decode_html(html) if isinstance(html, (bytes, bytearray)) else (html or "")
-                blocks = segment_blocks(raw)
-                droute = doc_route(lang)
-                forced_id = -1
-                if fallback and blocks and not any(b.kept for b in blocks):
-                    forced_id = best_block(blocks).block_id
-                for b in blocks:
-                    route = droute if droute is not None else block_route(b.text)
-                    forced = b.block_id == forced_id
-                    text = b.text if (b.kept or forced or emit_filtered_text) else ""
-                    emit(url, ts, b.block_id, b.tag, text, b.n_chars,
-                         b.n_link_chars, b.n_tags, b.link_density,
-                         b.tag_density, b.score, route, len(blocks), None,
-                         forced)
-                emit(url, ts, -1, "", "", 0, 0, 0, 0.0, 0.0, 0.0, "",
-                     len(blocks), None)
-            except Exception as exc:  # noqa: BLE001 — error rows, not exceptions
-                emit(url, ts, -1, "", "", 0, 0, 0, 0.0, 0.0, 0.0, "",
-                     0, f"error:{type(exc).__name__}")
-        yield pd.DataFrame(out)
-
-
-def _recognize_series(text: pd.Series, lang: pd.Series) -> pd.Series:
-    """Series->Series body of the Arrow-batched recognize stage (r8): the
-    per-block normalize is a function of (text, lang) ALONE — sentinel rows
-    carry text '' and normalize('') == '' — so the staged pipeline ships
-    ONLY those two columns to Python and the six carry columns
-    (url/warc_ts/ids/flags) stay in the JVM. Same recognize_block oracle
-    per row; measured ~2x on the recognize stage of the 20k-doc bench
-    corpus (1.1M surviving blocks), byte-identity pinned by the staged ==
-    fused golden tests."""
-    return pd.Series(
-        [recognize_block(t, l) for t, l in zip(text, lang)], dtype="object"
+def _extracted_batch(url, warc_ts, results: list[ExtractResult],
+                     extra: dict[str, pa.Array]) -> pa.RecordBatch:
+    """One EXTRACTED_CORE_SCHEMA batch (+ ``extra`` columns appended)."""
+    return pa.RecordBatch.from_arrays(
+        [
+            url,
+            warc_ts,
+            pa.array([r.extracted_text for r in results], pa.string()),
+            pa.array([[vars(s) for s in r.spans] for r in results], _SPANS_TYPE),
+            pa.array([r.n_blocks for r in results], pa.int32()),
+            pa.array([r.n_kept for r in results], pa.int32()),
+            pa.array([r.status for r in results], pa.string()),
+            *extra.values(),
+        ],
+        names=["url", "warc_ts", "extracted_text", "spans", "n_blocks",
+               "n_kept", "status", *extra],
     )
 
 
-def recognize_norm_udf():
-    """The scalar Arrow (pandas) UDF wrapping :func:`_recognize_series`.
-    Built lazily so importing this module never requires a live session.
-    asNondeterministic: the downstream non-empty filter references the UDF
-    column, and the optimizer otherwise duplicates the evaluation below
-    the pushed filter — every surviving block paid recognize TWICE
-    (optimization-guide §4.4; plan-pinned to ONE ArrowEvalPython in
-    test_golden_e2e). The function is pure, so results are unaffected."""
-    from pyspark.sql import functions as F
-
-    return F.pandas_udf(_recognize_series, returnType="string").asNondeterministic()
-
-
-def recognize_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage 2: surviving blocks -> normalized text."""
-    for pdf in batches:
-        norm = [
-            recognize_block(text, lang) if block_id >= 0 else ""
-            for text, lang, block_id in zip(pdf["text"], pdf["lang"], pdf["block_id"])
-        ]
-        yield pd.DataFrame(
-            {
-                "url": pdf["url"],
-                "warc_ts": pdf["warc_ts"],
-                "block_id": pdf["block_id"],
-                "lang": pdf["lang"],
-                "norm_text": norm,
-                "doc_n_blocks": pdf["doc_n_blocks"],
-                "doc_status": pdf["doc_status"],
-                "forced": pdf["forced"],
-            }
-        )
-
-
-def assemble_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas stage 3: partition-local reading-order reassembly.
+def recognize_assemble(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Staged stage 2: surviving blocks → one extracted row per document.
 
     Stage 1 emits each document's blocks consecutively and terminates the run
-    with its sentinel row (``block_id = -1``); the Catalyst keep-filter and the
-    recognize stage are narrow, order-preserving transformations, so within a
-    partition every document is still a contiguous run ending in its sentinel.
-    Reassembly therefore needs NO shuffle at all: accumulate rows, flush on the
-    sentinel (state carries across Arrow batch boundaries). This is the
-    distributed form of the reference's in-process reading-order join
-    (``bilingual_ocr.py:461`` "\\n".join) — same prefix-sum span math as
-    ``extraction.core.extract_document``, asserted byte-identical to fused by
-    tests/test_golden_e2e.py.
+    with its sentinel row (``block_id = -1``); the Catalyst keep-filter
+    between the stages is narrow and order-preserving, so within a partition
+    every document is still a contiguous run ending in its sentinel.
+    Reassembly therefore needs NO shuffle at all: normalize each block, drop
+    empty norms (O8), and flush the document on its sentinel — the parts
+    state carries across Arrow batch boundaries. The document is joined by
+    ``extraction.core.assemble``, the same helper as the fused stage.
 
     Duplicate (url, warc_ts) page rows each produce their own output row —
     identical to fused mode, unlike a groupBy-based reassembly which would
@@ -225,183 +205,52 @@ def assemble_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """
     parts: list[tuple[int, str, str]] = []  # (block_id, route, norm_text)
     any_forced = False  # this doc's surviving parts came from the O5 ladder
-
-    def new_out() -> dict[str, list]:
-        return {
-            "url": [], "warc_ts": [], "extracted_text": [], "spans": [],
-            "n_blocks": [], "n_kept": [], "status": [],
-        }
-
-    out = new_out()
-    for pdf in batches:
-        for url, ts, block_id, lang, norm, doc_nb, doc_status, forced in zip(
-            pdf["url"], pdf["warc_ts"], pdf["block_id"], pdf["lang"],
-            pdf["norm_text"], pdf["doc_n_blocks"], pdf["doc_status"],
-            pdf["forced"],
-        ):
+    for b in batches:
+        src: list[int] = []  # sentinel row of each finished document
+        results: list[ExtractResult] = []
+        rows = zip(*(b.column(c).to_pylist() for c in (
+            "block_id", "text", "lang", "doc_n_blocks", "doc_status", "forced",
+        )))
+        for i, (block_id, text, lang, doc_nb, doc_status, forced) in enumerate(rows):
             if block_id >= 0:
+                norm = recognize_block(text, lang)
                 if norm:
-                    parts.append((int(block_id), lang, norm))
-                    any_forced = any_forced or bool(forced)
+                    parts.append((block_id, lang, norm))
+                    any_forced = any_forced or forced
                 continue
-            # sentinel row: the document run is complete — finalize it.
-            # Blocks arrived in stage-1 emit order (== block_id order); the
-            # sort is a no-op safety net, O(1) comparisons on sorted input.
-            parts.sort(key=lambda p: p[0])
-            spans: list[dict] = []
-            texts: list[str] = []
-            pos = 0
-            for bid, route, norm_text in parts:
-                end = pos + len(norm_text)
-                spans.append(
-                    {"block_id": bid, "start": pos, "end": end, "lang": route}
-                )
-                texts.append(norm_text)
-                pos = end + 1  # +1 for the '\n' joiner
-            if isinstance(doc_status, str) and doc_status:
+            if doc_status:
                 status = doc_status  # error:<ExcName> rows pass through
             elif any_forced:
                 status = "fallback"  # parts exist only via the O5 ladder
             else:
                 status = "ok" if parts else "empty"
-            out["url"].append(url)
-            out["warc_ts"].append(ts)
-            out["extracted_text"].append("\n".join(texts))
-            out["spans"].append(spans)
-            out["n_blocks"].append(int(doc_nb))
-            out["n_kept"].append(len(parts))
-            out["status"].append(status)
+            text_out, spans = assemble(parts)
+            results.append(
+                ExtractResult("", text_out, spans, doc_nb, len(parts), status)
+            )
+            src.append(i)
             parts = []
             any_forced = False
-        if out["url"]:
-            yield pd.DataFrame(out)
-            out = new_out()
-    if out["url"]:  # pragma: no cover — every doc ends in a sentinel
-        yield pd.DataFrame(out)
+        if results:
+            take = pa.array(src, pa.int32())
+            yield _extracted_batch(
+                pc.take(b.column("url"), take), pc.take(b.column("warc_ts"), take),
+                results, {},
+            )
 
-
-def make_extract_fused(fallback: bool = False):
-    """Build the fused stage fn; ``fallback=True`` enables the O5 ladder."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _extract_fused_impl(batches, fallback)
-
-    return fn
-
-
-# --- Arrow-native fused stage (mapInArrow) ---------------------------------
-# Same extraction calls as the pandas stage (byte-identical by construction,
-# pinned by tests), but the batch never round-trips through pandas: the url/
-# warc_ts columns pass through as raw Arrow arrays and outputs are built as
-# Arrow arrays directly. On the big-binary pages workload the pandas
-# materialization is a measurable share of wall time (a passthrough
-# mapInPandas costs ~3-4 s of an ~8 s local[8] extraction; the mapInArrow
-# passthrough ~1.5-3.5 s), so the Arrow stage is the default production
-# path; the pandas twin remains for the differential test discipline.
 
 def make_extract_fused_arrow(fallback: bool = False):
-    import pyarrow as pa
+    """Build the fused stage fn; ``fallback=True`` enables the O5 ladder.
 
-    spans_type = pa.list_(
-        pa.struct(
-            [
-                ("block_id", pa.int32()),
-                ("start", pa.int32()),
-                ("end", pa.int32()),
-                ("lang", pa.string()),
-            ]
-        )
-    )
+    Input columns other than ``url/warc_ts/html/lang`` pass through
+    unchanged after the core schema columns (the coverage query carries
+    ``n_crawl`` this way)."""
 
-    def fn(batches):
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:
-            idx = {name: i for i, name in enumerate(b.schema.names)}
-            urls = b.column(idx["url"]).to_pylist()
-            htmls = b.column(idx["html"]).to_pylist()
-            langs = b.column(idx["lang"]).to_pylist()
-            texts: list[str] = []
-            spans: list[list[dict]] = []
-            n_blocks: list[int] = []
-            n_kept: list[int] = []
-            status: list[str] = []
-            for url, html, lang in zip(urls, htmls, langs):
-                r = extract_document(url, html, lang, fallback)
-                texts.append(r.extracted_text)
-                spans.append(
-                    [
-                        {"block_id": s.block_id, "start": s.start,
-                         "end": s.end, "lang": s.lang}
-                        for s in r.spans
-                    ]
-                )
-                n_blocks.append(r.n_blocks)
-                n_kept.append(r.n_kept)
-                status.append(r.status)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(idx["url"]),
-                    b.column(idx["warc_ts"]),
-                    pa.array(texts, pa.string()),
-                    pa.array(spans, spans_type),
-                    pa.array(n_blocks, pa.int32()),
-                    pa.array(n_kept, pa.int32()),
-                    pa.array(status, pa.string()),
-                ],
-                names=["url", "warc_ts", "extracted_text", "spans",
-                       "n_blocks", "n_kept", "status"],
-            )
+            pages = zip(*(b.column(c).to_pylist() for c in ("url", "html", "lang")))
+            results = [extract_document(u, h, l, fallback) for u, h, l in pages]
+            extra = {n: b.column(n) for n in b.schema.names if n not in _PAGE_COLS}
+            yield _extracted_batch(b.column("url"), b.column("warc_ts"), results, extra)
 
     return fn
-
-
-def extract_fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused per-document stage: one Arrow pass, zero shuffles."""
-    return _extract_fused_impl(batches, False)
-
-
-EXTRACTED_COVERAGE_SCHEMA = EXTRACTED_CORE_SCHEMA + ", n_crawl int"
-
-
-def extract_fused_coverage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Fused stage + in-row coverage carry (VERDICT r2 #4): the crawl-text
-    length arrives as ONE integer per document (computed Catalyst-side — the
-    text column itself never crosses the Arrow channel) and rides through
-    extraction, so the coverage differential is per-row arithmetic
-    downstream — no corpus-wide url join at any scale. Same loop as the
-    plain fused stage (shared _extract_fused_impl) — no drift possible."""
-    return _extract_fused_impl(batches, False, passthrough=("n_crawl",))
-
-
-def _extract_fused_impl(
-    batches: Iterator[pd.DataFrame],
-    fallback: bool,
-    passthrough: tuple[str, ...] = (),
-) -> Iterator[pd.DataFrame]:
-    """Shared fused row loop; ``passthrough`` input columns ride along
-    unchanged and are appended after the core schema columns."""
-    for pdf in batches:
-        rows: dict[str, list] = {
-            "url": [], "warc_ts": [], "extracted_text": [], "spans": [],
-            "n_blocks": [], "n_kept": [], "status": [],
-            **{c: [] for c in passthrough},
-        }
-        extra_cols = [pdf[c] for c in passthrough]
-        for url, ts, html, lang, *extras in zip(
-            pdf["url"], pdf["warc_ts"], pdf["html"], pdf["lang"], *extra_cols
-        ):
-            r = extract_document(url, html, lang, fallback)
-            rows["url"].append(url)
-            rows["warc_ts"].append(ts)
-            rows["extracted_text"].append(r.extracted_text)
-            rows["spans"].append(
-                [
-                    {"block_id": s.block_id, "start": s.start, "end": s.end, "lang": s.lang}
-                    for s in r.spans
-                ]
-            )
-            rows["n_blocks"].append(r.n_blocks)
-            rows["n_kept"].append(r.n_kept)
-            rows["status"].append(r.status)
-            for c, v in zip(passthrough, extras):
-                rows[c].append(v)
-        yield pd.DataFrame(rows)

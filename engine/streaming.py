@@ -3,11 +3,10 @@
 The reference is strictly batch (SURVEY.md §2.9); the engine's incremental
 behavior is resume-by-anti-join (J3/J4). This module provides the same
 semantics as a Structured Streaming job: ``readStream`` over the pages
-directory → the SAME fused extraction stage → parquet sink with checkpoint,
-under ``Trigger.AvailableNow`` — each invocation processes exactly the files
-that arrived since the last checkpoint and terminates. Byte-identity is
-unchanged because the streaming plan calls the identical ``extract_fused``
-Arrow stage.
+directory → ``pipeline.run_extract`` → parquet sink with checkpoint, under
+``Trigger.AvailableNow`` — each invocation processes exactly the files that
+arrived since the last checkpoint and terminates. Byte-identity is unchanged
+because the streaming plan is the batch fused plan over a streaming source.
 
 Also included: a watermarked event-time tumbling-window aggregation over an
 events stream (late data dropped past the watermark) — the streaming form of
@@ -18,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from engine.stages import EXTRACTED_CORE_SCHEMA, extract_fused
+from engine.pipeline import run_extract
 
 PAGES_SCHEMA = T.StructType(
     [
@@ -45,12 +44,7 @@ def incremental_extract(
     the streaming twin of ``tableio.remaining`` + ``merge_by_url``.
     """
     pages = spark.readStream.schema(PAGES_SCHEMA).parquet(pages_dir)
-    extracted = (
-        pages.select("url", "warc_ts", "html", "lang")
-        .mapInPandas(extract_fused, schema=EXTRACTED_CORE_SCHEMA)
-        .withColumn("part_id", F.spark_partition_id())
-        .withColumn("lineage", F.lit(run_id))
-    )
+    extracted = run_extract(pages, run_id=run_id)
     query = (
         extracted.writeStream.format("parquet")
         .option("path", out_dir)
@@ -418,16 +412,10 @@ def incremental_extract_warc(
         .select("path", "content")
     )
 
-    pages = (
-        files.mapInPandas(warc_parse_batches, schema=WARC_PAGES_SCHEMA)
-        .where("status = 'ok'")
-        .select("url", "warc_ts", "html", "lang")
+    pages = files.mapInPandas(warc_parse_batches, schema=WARC_PAGES_SCHEMA).where(
+        "status = 'ok'"
     )
-    extracted = (
-        pages.mapInPandas(extract_fused, schema=EXTRACTED_CORE_SCHEMA)
-        .withColumn("part_id", F.spark_partition_id())
-        .withColumn("lineage", F.lit(run_id))
-    )
+    extracted = run_extract(pages, run_id=run_id)
     query = (
         extracted.writeStream.format("parquet")
         .option("path", out_dir)

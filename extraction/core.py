@@ -44,6 +44,20 @@ def recognize_block(text: str, route: str) -> str:
     return normalize_text(text, route)
 
 
+def assemble(parts: list[tuple[int, str, str]]) -> tuple[str, list[Span]]:
+    """Reading-order reassembly (ref ``bilingual_ocr.py:461`` ``"\\n".join``):
+    ``(block_id, route, norm_text)`` parts, in block order → the document
+    text and one span per part. Offsets are a prefix sum over the part
+    lengths plus one ``'\\n'`` joiner between parts."""
+    spans: list[Span] = []
+    pos = 0
+    for block_id, route, norm in parts:
+        end = pos + len(norm)
+        spans.append(Span(block_id, pos, end, route))
+        pos = end + 1  # +1 for the '\n' joiner
+    return "\n".join(p[2] for p in parts), spans
+
+
 def best_block(blocks: list[Block]) -> Block | None:
     """The relaxed-pass winner: highest score, ties to the lowest block_id.
 
@@ -81,6 +95,7 @@ def extract_document(
             if norm:
                 parts.append((b.block_id, route, norm))
 
+        status = "ok"
         if not parts:
             # The relaxed pass triggers on the DETECT-level condition "no
             # block passed the keep rule" (ref: "no regions detected"), not
@@ -94,25 +109,12 @@ def extract_document(
                     route = droute if droute is not None else block_route(best.text)
                     norm = recognize_block(best.text, route)
                     if norm:
-                        return ExtractResult(
-                            url,
-                            norm,
-                            [Span(best.block_id, 0, len(norm), route)],
-                            n_blocks,
-                            1,
-                            "fallback",
-                        )
-            return ExtractResult(url, "", [], n_blocks, 0, "empty")
+                        parts.append((best.block_id, route, norm))
+                        status = "fallback"
+            if not parts:
+                return ExtractResult(url, "", [], n_blocks, 0, "empty")
 
-        spans: list[Span] = []
-        pos = 0
-        texts: list[str] = []
-        for block_id, route, norm in parts:
-            start = pos
-            end = start + len(norm)
-            spans.append(Span(block_id, start, end, route))
-            texts.append(norm)
-            pos = end + 1  # +1 for the '\n' joiner
-        return ExtractResult(url, "\n".join(texts), spans, n_blocks, len(parts), "ok")
+        text, spans = assemble(parts)
+        return ExtractResult(url, text, spans, n_blocks, len(parts), status)
     except Exception as exc:  # noqa: BLE001 — error rows, not exceptions
         return ExtractResult(url, "", [], 0, 0, f"error:{type(exc).__name__}")

@@ -42,14 +42,15 @@ def main() -> None:
     sections.append((
         "Fused extraction (default, zero-shuffle)",
         "No Exchange anywhere; ReadSchema prunes the crawl `text` column; "
-        "the whole pipeline is scan → ArrowEvalPython → sink.",
+        "the whole pipeline is scan → MapInArrow → sink.",
         _plan(pipeline.run_fused(pages)),
     ))
     sections.append((
         "Staged extraction (inspection path)",
-        "Catalyst-side KEEP filter between the two Python stages; one "
-        "Exchange on url feeding both the window prefix-sum and the ordered "
-        "reassembly aggregate (same key — no second shuffle).",
+        "Two MapInArrow stages (detect; recognize + reading-order "
+        "reassembly on each document's sentinel row) with the Catalyst-side "
+        "KEEP filter between them; zero Exchange — reassembly is "
+        "partition-local.",
         _plan(pipeline.run_staged(pages), "simple"),
     ))
     sections.append((

@@ -28,6 +28,8 @@ def test_fused_plan_prunes_columns_and_has_no_shuffle(spark, pages_unit_path):
     assert "html" in read_schema and "lang" in read_schema
     # zero-shuffle default: no Exchange in the fused plan
     assert "Exchange" not in plan
+    # one Arrow carrier: the fused stage never materializes pandas frames
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
 
 
 def test_salted_plan_has_single_shuffle(spark, pages_unit_path):
@@ -499,6 +501,8 @@ def test_coverage_plan_has_no_join_and_no_exchange(spark):
     plan = _plan(df, "simple")
     assert "Join" not in plan, plan
     assert "Exchange" not in plan, plan
+    # n_crawl passes through the same fused Arrow kernel as plain extraction
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
 
 
 def test_doc_chunks_plan_has_zero_exchange(spark):

@@ -21,9 +21,12 @@ def test_incremental_extract_matches_batch_goldens(spark, tmp_path):
     first, second = rows[:40], rows[40:]
     write_parquet(first, f"{pages_dir}/batch0.parquet")
 
-    incremental_extract(spark, pages_dir, out_dir, cp_dir, run_id="s1")
+    query = incremental_extract(spark, pages_dir, out_dir, cp_dir, run_id="s1")
     got1 = spark.read.parquet(out_dir)
     assert got1.count() == 40
+    # the streaming plan runs the batch fused kernel: one Arrow stage
+    plan = query._jsq.explainInternal(False)
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan, plan
 
     # new files land; second invocation processes ONLY them
     write_parquet(second, f"{pages_dir}/batch1.parquet")
